@@ -1,37 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // default to the machine's cores (the driver contract is local[32])
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // cap AQE coalescing at 16 MB wire-bytes per reducer: agg hash
-      // entries cost ~3-5x their wire bytes on-heap, so the 64 MB
-      // default re-collapsed basket_pairs' 36 M-group aggregation at
-      // sf3 to 8 partitions of ~4.5 M groups each — the GC tail the
-      // r13 chain measured; at 16 MB the same shuffle keeps 26-32
-      // reducers. (A wider initialPartitionNum was tried and reverted:
-      // it taxed every small-scale query with extra tasks while the
-      // advisory cap alone delivers the partition count.)
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "16m")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      // explicit AQE skew-join handling, same contract as Verify
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      // RocksDB + changelog checkpointing for streaming replays — the
-      // Verify session's contract (see Verify.scala for the rationale)
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .config("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-        "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.builder().getOrCreate()
     // warm JIT/classloading/codegen so the first measured query isn't
     // charged one-time setup. Measured (RunOne, sf0.1): a cold
     // dedup_clusters run costs 10.8s vs 1.9s steady-state — and a
@@ -44,7 +15,7 @@ object Bench {
     try SparkEntry.entry(spark).count() catch { case _: Throwable => () }
     try SparkEntry.queries("dedup_multisignal")(spark, sfDir).count()
     catch { case _: Throwable => () }
-    spark.catalog.clearCache()
+    GraftSession.reset(spark)
     // median-of-3 per query: a single pass is dominated by scheduler /
     // co-tenant noise (observed 12x on individual queries between runs
     // of the SAME commit — r5 driver vs builder snapshots), which
@@ -113,14 +84,7 @@ object Bench {
     // window foreignByQuery accumulates over): the denominator for the
     // per-query contamination gate below
     val wallByQuery = scala.collection.mutable.LinkedHashMap[String, Double]()
-    // dev loop: SPARK_GRAFT_BENCH_ONLY=a,b restricts the sweep for
-    // A/B timing of one query family (driver never sets it)
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(',').map(_.trim).toSet)
-    val selected = only match {
-      case Some(names) => SparkEntry.queries.filter(kv => names(kv._1))
-      case None        => SparkEntry.queries
-    }
+    val selected = GraftSession.selectedQueries
     // chain hygiene (r14): in the shared-JVM sweep a heavy query's
     // garbage is collected DURING the next query and reads as that
     // query's regression — most r13 sf3 flags dissolved in isolation
@@ -132,55 +96,22 @@ object Bench {
     def settleHeap(): Unit = if (gcSettle) {
       System.gc(); Thread.sleep(300); System.gc(); Thread.sleep(200)
     }
-    // memo-trainer honesty: the train-once artifacts (BPE merge table,
-    // bisecting tree) survive the inter-pass cache hygiene BY DESIGN —
-    // derived queries are supposed to measure reuse. But each family's
-    // designated TRAINER query must measure a real training run in
-    // every pass (not a memo lookup, the r15-advice gap), so its
-    // passes evict the family's memo first. Evicting the tree memo
-    // wholesale when one tree trainer runs costs the other family at
-    // most one cold rebuild — bounded, and each family's own trainer
-    // retrains regardless of sweep order.
-    // For the bisecting tree ONE query carries the trainer role:
-    // semdedup_prune rebuilds the full-corpus tree (the larger of the
-    // two family trees) every pass, so the committed bench always
-    // contains a real measured tree build; the kNN-side queries reuse
-    // their memoized half-corpus tree after the first cold pass — the
-    // production shape (an IVF index is built once and queried many
-    // times), and the build cost it skips is bounded above by the
-    // number semdedup_prune measures.
-    val memoTrainers: Map[String, () => Unit] = Map(
-      "bpe_train_steps" -> (() => SparkEntry.evictBpeMemo()),
-      "bpe_pretok_train" -> (() => SparkEntry.evictBpeMemo()),
-      "bpe_byte_train" -> (() => SparkEntry.evictBpeMemo()),
-      "semdedup_prune" -> (() => graft.operators.Similarity.evictTreeMemo()))
-    val results: Map[String, Double] = selected.flatMap { case (name, fn) =>
+    val results: Map[String, Double] = selected.flatMap { case (name, _) =>
       settleHeap()
       val times = (0 until passes).flatMap { i =>
-        memoTrainers.get(name).foreach(_.apply())
         val qBusy0 = totalBusyJiffies(); val qSelf0 = selfJiffies()
         val t0 = System.nanoTime()
+        // one protocol run (GraftSession.run: trainer eviction, noop
+        // write, reset); a throwing pass keeps its wall time in the
+        // per-query contamination window but is never a timing
         val ok =
-          // noop WRITE, not count(): a count-star lets the optimizer
-          // prune count-irrelevant subtrees — semdedup_prune's entire
-          // dominance join vanished under count() (left join with a
-          // provably-unique right side preserves cardinality), so the
-          // timing measured assignment only, 3.4× under the real query.
-          // The noop sink materializes every output column (the same
-          // action Pipeline.consume runs), so the timed plan is the
-          // plan a real sink pays, minus I/O.
-          try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
+          try { GraftSession.run(spark, name, sfDir); true }
           catch { case e: Throwable =>
             if (!errors.contains(name))
               errors(name) = (e.getClass.getSimpleName + ": " +
                 String.valueOf(e.getMessage).replaceAll("\\s+", " ")).take(200)
             false
           }
-        // release intermediates persisted inside operators: unpersist
-        // AND drop the registry's strong refs (clearCache alone would
-        // leave the IdentityHashMap growing across the 153×3 sweep)
-        graft.operators.Caching.release()
-        spark.catalog.clearCache()
         val dt = (System.nanoTime() - t0) / 1e9
         wallByQuery(name) = wallByQuery.getOrElse(name, 0.0) + dt
         val qBusy1 = totalBusyJiffies(); val qSelf1 = selfJiffies()
@@ -216,7 +147,7 @@ object Bench {
     // channels (detected by CollectMetrics in the analyzed plan —
     // plan construction triggers no jobs) so queries_observed is
     // populated without perturbing any recorded timing.
-    if (!graft.operators.LshObserve.enabled && only.isEmpty) {
+    if (!graft.operators.LshObserve.enabled && GraftSession.only.isEmpty) {
       sys.props("graft.observe") = "1"
       try selected.foreach { case (name, fn) =>
         try {
@@ -227,7 +158,7 @@ object Bench {
           if (hasObs) {
             // noop write, not count(): count-star pruning can remove
             // the CollectMetrics subtree itself (semdedup_prune)
-            df.write.format("noop").mode("overwrite").save()
+            GraftSession.noopWrite(df)
             org.apache.spark.GraftListenerBridge
               .waitListenerBusEmpty(spark.sparkContext, 10000)
             if (!observedBuf.isEmpty)
@@ -239,8 +170,7 @@ object Bench {
         // are swallowed; a dying JVM (OOM) or an interrupt propagates
         } catch { case scala.util.control.NonFatal(_) => () }
         finally {
-          graft.operators.Caching.release()
-          spark.catalog.clearCache()
+          GraftSession.reset(spark)
           observedBuf.clear()
         }
       } finally sys.props.remove("graft.observe")

@@ -1,15 +1,21 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+
+import scala.collection.mutable
 
 /** Dev profiler: time (and optionally explain) one registered query.
   *
-  * `sbt "runMain graft.RunOne <name> [sfDir] [--explain] [--reps N]"`
+  * `sbt "runMain graft.RunOne <name> [sfDir] [--explain] [--reps N] [--json f]"`
   *
-  * Mirrors Bench's session config so a number measured here predicts
-  * the per-query number in BENCH_r{N}.json. Repetitions clear the
-  * cache between runs (like Bench does between queries) so the
-  * steady-state rep isolates query cost from JIT/classload warmup.
+  * Runs Bench's session and per-query protocol (GraftSession.run:
+  * trainer eviction, noop write, reset), so a number measured here
+  * predicts the per-query number in bench.json; rep 1 carries the
+  * JIT/classload warmup. After the final rep it prints every Spark job
+  * that rep ran — wall time, stage count and each stage's first
+  * call-site line / task count — which shows where a multi-level plan
+  * spends its fixed overhead (job scheduling, checkpoint
+  * materialization, broadcast builds).
   */
 object RunOne {
   def main(args: Array[String]): Unit = {
@@ -30,52 +36,37 @@ object RunOne {
     // and recorded AUTOMATICALLY, not hand-written (r16 verdict #6)
     val jsonOut = args.sliding(2).collectFirst {
       case Array("--json", p) => p }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // cap AQE coalescing at 16 MB wire-bytes per reducer: agg hash
-      // entries cost ~3-5x their wire bytes on-heap, so the 64 MB
-      // default re-collapsed basket_pairs' 36 M-group aggregation at
-      // sf3 to 8 partitions of ~4.5 M groups each — the GC tail the
-      // r13 chain measured; at 16 MB the same shuffle keeps 26-32
-      // reducers. (A wider initialPartitionNum was tried and reverted:
-      // it taxed every small-scale query with extra tasks while the
-      // advisory cap alone delivers the partition count.)
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "16m")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      // streaming-replay state store, same contract as Verify/Bench
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .config("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-        "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.builder().getOrCreate()
     val fn = SparkEntry.queries.getOrElse(name, sys.error(s"unknown query: $name"))
     if (explain) fn(spark, sfDir).explain("formatted")
+    // per-job lines of the current rep (cleared at each rep's start)
+    val starts = mutable.Map[Int, (Long, String)]()
+    val jobs = mutable.ArrayBuffer[String]()
+    spark.sparkContext.addSparkListener(new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = {
+        val site = js.stageInfos.map(si => s"${si.name.takeWhile(_ != '\n').take(60)}/${si.numTasks}")
+          .mkString(" | ")
+        starts(js.jobId) = (js.time, s"stages=${js.stageInfos.size} $site")
+      }
+      override def onJobEnd(je: SparkListenerJobEnd): Unit =
+        starts.get(je.jobId).foreach { case (t0, site) =>
+          jobs += f"[job] id=${je.jobId}%-4d dt=${(je.time - t0) / 1e3}%7.3fs  $site"
+        }
+    })
     // foreign CPU per rep (core-seconds other processes burned while
     // the rep ran) — the ONE shared /proc accounting (graft.ProcCpu)
     // Bench uses, steal included; an adjudication number is only
     // evidence if it carries its own contamination measurement
     // (co-tenant bursts on this box fake 3-10x regressions within a
     // single JVM's reps)
-    def totalBusyJiffies(): Long = ProcCpu.totalBusyJiffies()
-    def selfJiffies(): Long = ProcCpu.selfJiffies()
     val times = Array.ofDim[Double](reps)
     val foreigns = Array.ofDim[Double](reps)
     (1 to reps).foreach { i =>
-      val b0 = totalBusyJiffies(); val s0 = selfJiffies()
-      val t0 = System.nanoTime()
-      // noop write = Bench's action (count-star pruning can skip
-      // count-irrelevant subtrees and fake the timing)
-      fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      val dt = (System.nanoTime() - t0) / 1e9
-      graft.operators.Caching.release()
-      spark.catalog.clearCache()
-      val b1 = totalBusyJiffies(); val s1 = selfJiffies()
+      org.apache.spark.GraftListenerBridge.waitListenerBusEmpty(spark.sparkContext, 10000)
+      starts.clear(); jobs.clear()
+      val b0 = ProcCpu.totalBusyJiffies(); val s0 = ProcCpu.selfJiffies()
+      val dt = GraftSession.run(spark, name, sfDir)
+      val b1 = ProcCpu.totalBusyJiffies(); val s1 = ProcCpu.selfJiffies()
       val foreign =
         if (b0 >= 0 && s0 >= 0 && b1 >= 0 && s1 >= 0)
           ((b1 - b0) - (s1 - s0)) / 100.0
@@ -83,6 +74,9 @@ object RunOne {
       times(i - 1) = dt; foreigns(i - 1) = foreign
       println(f"[runone] rep=$i $name t=$dt%.3fs foreign=$foreign%.1fs")
     }
+    org.apache.spark.GraftListenerBridge.waitListenerBusEmpty(spark.sparkContext, 10000)
+    jobs.foreach(println)
+    println(f"[runone] rep=$reps $name jobs=${jobs.size}")
     jsonOut.foreach { path =>
       // iso_mid = lower median of the WARM reps (rep 1 is the cold
       // JIT/classload run) — the same statistic the hand-written

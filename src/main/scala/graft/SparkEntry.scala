@@ -48,19 +48,15 @@ object SparkEntry {
   private val bpeMergeCache = scala.collection.concurrent.TrieMap
     .empty[(SparkSession, String, String), Seq[org.apache.spark.sql.Row]]
 
-  /** Drop the learned BPE merge tables (Bench trainer-pass hygiene:
-    * the two TRAIN queries must measure a real training run every
-    * pass, while encode/vocab keep measuring the intended train-once
-    * family cost).
+  /** Drop the learned BPE merge tables (GraftSession.memoTrainers:
+    * the TRAIN queries must measure a real training run every run,
+    * while encode/vocab keep measuring the intended train-once family
+    * cost).
     */
   def evictBpeMemo(): Unit = bpeMergeCache.clear()
 
   private def bpeMergesCached(
       s: SparkSession, dir: String, variant: String): DataFrame = {
-    // dev knob (driver never sets it): bypass the memo so RunOne can
-    // measure the FRESH trainer in steady state for adjudications
-    if (sys.env.contains("SPARK_GRAFT_BPE_NO_MEMO"))
-      bpeMergeCache.remove((s, dir, variant))
     val rows = bpeMergeCache.getOrElseUpdate((s, dir, variant), {
       val fresh = variant match {
         case "pretok" => TextAnalysis.bpeTrainStepsPretok(
@@ -2350,25 +2346,6 @@ object SparkEntry {
              AND l_discount BETWEEN 0.05 AND 0.07 AND l_quantity < 24""")
     }),
 
-    // TPC-H Q1: the canonical partial-agg benchmark — nine aggregates
-    // over a date-filtered scan, one shuffle of (flag,status) groups.
-    "sql_tpch_q1" -> ((s, dir) => {
-      t(s, dir, "lineitem").createOrReplaceTempView("lineitem")
-      s.sql(
-        """SELECT l_returnflag, l_linestatus,
-             round(sum(l_quantity), 2) AS sum_qty,
-             round(sum(l_extendedprice), 2) AS sum_base_price,
-             round(sum(l_extendedprice * (1 - l_discount)), 2) AS sum_disc_price,
-             round(sum(l_extendedprice * (1 - l_discount) * (1 + l_tax)), 2) AS sum_charge,
-             round(avg(l_quantity), 2) AS avg_qty,
-             round(avg(l_extendedprice), 2) AS avg_price,
-             round(avg(l_discount), 2) AS avg_disc,
-             count(*) AS count_order
-           FROM lineitem
-           WHERE l_shipdate <= '1998-09-02'
-           GROUP BY l_returnflag, l_linestatus""")
-    }),
-
     // Q18-style: IN subquery with HAVING — Catalyst decorrelates to a
     // semi join against the pre-aggregated key set (one extra shuffle,
     // no per-row subquery execution).
@@ -2395,22 +2372,6 @@ object SparkEntry {
            WHERE o_totalprice >
              (SELECT floor(avg(o_totalprice) * 100 + 0.5) / 100 FROM orders)
            GROUP BY o_orderstatus""")
-    }),
-
-    "sql_tpch_q3" -> ((s, dir) => {
-      Seq("customer", "orders", "lineitem")
-        .foreach(n => t(s, dir, n).createOrReplaceTempView(n))
-      s.sql(
-        """SELECT l_orderkey,
-             round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue,
-             CAST(o_orderdate AS STRING) AS orderdate,
-             o_orderpriority AS priority
-           FROM customer JOIN orders ON c_custkey = o_custkey
-           JOIN lineitem ON l_orderkey = o_orderkey
-           WHERE c_mktsegment = 'BUILDING'
-             AND o_orderdate < '1995-03-15' AND l_shipdate > '1995-03-15'
-           GROUP BY l_orderkey, o_orderdate, o_orderpriority
-           ORDER BY revenue DESC, orderdate, l_orderkey LIMIT 10""")
     }),
 
     "sql_tpch_q5" -> ((s, dir) => {

@@ -110,14 +110,59 @@ private[graft] object OraclesTpch {
   /** TPC-H shapes whose SQL is engine-portable verbatim: registered as
     * Spark queries AND as their own DuckDB oracles from one source of
     * truth (no drift possible). Together with the hand-built
-    * q1/q3/q5/q6/q7/q8/q9/q10/q13/q14/q17/q18/q22 this completes all
-    * 22 TPC-H query shapes. q2/q4/q11/q12/q16/q19/q20/q21 run the
+    * q5/q6/q7/q8/q9/q10/q13/q14/q17/q18/q22 this completes all 22
+    * TPC-H query shapes. q2/q4/q11/q12/q16/q19/q20/q21 run the
     * LITERAL spec structure over the derivation CTEs above (predicate
     * constants adapted to this corpus's value domains so each query is
     * non-degenerate). Money follows the integer-cents protocol; every
     * ratio output is computed in doubles (never Spark DECIMAL division).
     */
   val portableTpch: Map[String, (Seq[String], String)] = Map(
+
+    // Q1: the canonical partial-agg benchmark — nine aggregates over a
+    // date-filtered scan, one shuffle of (flag,status) groups. Every
+    // input is fixed to integer cents per ROW and summed exactly, so no
+    // output depends on an engine's summation order (a round() of a
+    // double sum lands either side of a .xx5 tie depending on it);
+    // each average is one IEEE division of two exact integers, rounded
+    // by the floor(x + 0.5) protocol.
+    "sql_tpch_q1" -> (Seq("lineitem") ->
+      """WITH l AS (SELECT l_returnflag, l_linestatus,
+             CAST(floor(l_quantity * 100 + 0.5) AS BIGINT) AS qty_c,
+             CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT) AS price_c,
+             CAST(floor(l_extendedprice * (1 - l_discount) * 100 + 0.5) AS BIGINT) AS disc_price_c,
+             CAST(floor(l_extendedprice * (1 - l_discount) * (1 + l_tax) * 100 + 0.5)
+               AS BIGINT) AS charge_c,
+             CAST(floor(l_discount * 100 + 0.5) AS BIGINT) AS disc_c
+           FROM lineitem
+           WHERE l_shipdate <= '1998-09-02')
+         SELECT l_returnflag, l_linestatus,
+           CAST(sum(qty_c) AS DOUBLE) / 100 AS sum_qty,
+           CAST(sum(price_c) AS DOUBLE) / 100 AS sum_base_price,
+           CAST(sum(disc_price_c) AS DOUBLE) / 100 AS sum_disc_price,
+           CAST(sum(charge_c) AS DOUBLE) / 100 AS sum_charge,
+           floor(CAST(sum(qty_c) AS DOUBLE) / count(*) + 0.5) / 100 AS avg_qty,
+           floor(CAST(sum(price_c) AS DOUBLE) / count(*) + 0.5) / 100 AS avg_price,
+           floor(CAST(sum(disc_c) AS DOUBLE) / count(*) + 0.5) / 100 AS avg_disc,
+           count(*) AS count_order
+         FROM l
+         GROUP BY l_returnflag, l_linestatus"""),
+
+    // Q3: shipping-priority top 10 — revenue in exact integer cents
+    // (the q1 protocol), so the LIMIT's ranking cannot flip with
+    // summation order either.
+    "sql_tpch_q3" -> (Seq("customer", "orders", "lineitem") ->
+      """SELECT l_orderkey,
+           CAST(sum(CAST(floor(l_extendedprice * (1 - l_discount) * 100 + 0.5) AS BIGINT))
+             AS DOUBLE) / 100 AS revenue,
+           CAST(o_orderdate AS STRING) AS orderdate,
+           o_orderpriority AS priority
+         FROM customer JOIN orders ON c_custkey = o_custkey
+         JOIN lineitem ON l_orderkey = o_orderkey
+         WHERE c_mktsegment = 'BUILDING'
+           AND o_orderdate < '1995-03-15' AND l_shipdate > '1995-03-15'
+         GROUP BY l_orderkey, o_orderdate, o_orderpriority
+         ORDER BY revenue DESC, orderdate, l_orderkey LIMIT 10"""),
 
     // Q2 LITERAL: min-cost supplier per part, correlated min subquery
     // over partsupp re-restricted to the region — decorrelates to one

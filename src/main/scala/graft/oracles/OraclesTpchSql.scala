@@ -120,20 +120,6 @@ private[graft] object OraclesTpchSql {
          WHERE l_shipdate >= '1996-01-01' AND l_shipdate < '1997-01-01'
            AND l_discount BETWEEN 0.05 AND 0.07 AND l_quantity < 24""",
 
-    "sql_tpch_q1" ->
-      """SELECT l_returnflag, l_linestatus,
-           round(sum(l_quantity), 2) AS sum_qty,
-           round(sum(l_extendedprice), 2) AS sum_base_price,
-           round(sum(l_extendedprice * (1 - l_discount)), 2) AS sum_disc_price,
-           round(sum(l_extendedprice * (1 - l_discount) * (1 + l_tax)), 2) AS sum_charge,
-           round(avg(l_quantity), 2) AS avg_qty,
-           round(avg(l_extendedprice), 2) AS avg_price,
-           round(avg(l_discount), 2) AS avg_disc,
-           count(*) AS count_order
-         FROM lineitem
-         WHERE l_shipdate <= '1998-09-02'
-         GROUP BY l_returnflag, l_linestatus""",
-
     "sql_tpch_q18" ->
       """SELECT o_orderkey, o_orderdate::VARCHAR AS orderdate, o_totalprice,
            round(sum(l_quantity), 2) AS total_qty
@@ -141,18 +127,6 @@ private[graft] object OraclesTpchSql {
          WHERE o_orderkey IN (SELECT l_orderkey FROM lineitem
                               GROUP BY l_orderkey HAVING sum(l_quantity) > 150)
          GROUP BY o_orderkey, o_orderdate, o_totalprice""",
-
-    "sql_tpch_q3" ->
-      """SELECT l_orderkey,
-           round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue,
-           o_orderdate::VARCHAR AS orderdate,
-           o_orderpriority AS priority
-         FROM customer JOIN orders ON c_custkey = o_custkey
-         JOIN lineitem ON l_orderkey = o_orderkey
-         WHERE c_mktsegment = 'BUILDING'
-           AND o_orderdate < '1995-03-15' AND l_shipdate > '1995-03-15'
-         GROUP BY l_orderkey, o_orderdate, o_orderpriority
-         ORDER BY revenue DESC, orderdate, l_orderkey LIMIT 10""",
 
     "sql_tpch_q5" ->
       """SELECT n_name, round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
